@@ -301,9 +301,9 @@ class Base:
     # a SEPARATE ``_checkpoint_offsets.json`` sidecar loaded only by
     # deep time travel — keeping the O(versions) index out of the open
     # path, whose cost is thereby O(checkpoint_every), flat in table
-    # age (tools/rehearse_r11.py measures it across 500 commits; with
-    # the index inline the open path re-grew ~1 µs/version — measured,
-    # hence the split). Every read path verifies the checkpoint
+    # age (measured across 500 commits: BENCH_NOTES.md §Version-log
+    # checkpoint rehearsal; with the index inline the open path re-grew
+    # ~1 µs/version — measured, hence the split). Every read path verifies the checkpoint
     # against the live log (size, version echo) and falls back to the
     # full scan on any mismatch — a deleted/stale/corrupt checkpoint
     # or index can never change results, only speed. Log SIZE is

@@ -454,14 +454,14 @@ def incremental_semantic_dedup(
         BROADCAST_VERIFY_CAP,
         _keep_cache,
         _maybe_broadcast,
-        _retire_scope_caches,
         connected_components,
+        release_caches,
     )
 
     spark = new_df.sparkSession
     src, meta = _resolve(path)
     centroids = meta["centroids"]
-    _retire_scope_caches()
+    release_caches()
     delta = _keep_cache(
         ivf_assign(
             new_df.select(

@@ -28,7 +28,6 @@ from __future__ import annotations
 import math
 import threading
 import time
-from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from pyspark import StorageLevel
@@ -71,84 +70,27 @@ def _maybe_broadcast(side: DataFrame, flag: bool) -> DataFrame:
 #: materializes the result; instead each operator retires the previous
 #: call's checkpoints on entry, bounding live cache to one call's worth.
 #: Call :func:`release_caches` to drop them eagerly.
-#:
-#: r15 SCOPES: the retire-on-entry contract is per *cache scope*. By
-#: default every thread shares one scope (key ``None``), so sequential
-#: callers and streaming foreachBatch loops behave exactly as before —
-#: batch N retires batch N-1's frames. A member chain built under
-#: :func:`cache_scope` (an ``overlap_build`` worker) registers into its
-#: own private scope, so a concurrent operator's retire-on-entry (e.g.
-#: the semantic sink's per-batch ``incremental_semantic_dedup``) cannot
-#: drop the chain's still-lazy persisted frames mid-build — the q43
-#: ordering constraint this removes was worth +11 s when violated.
-#: Live cache stays bounded: one call's worth per scope, and scopes
-#: only exist while their chain is being built.
 _LIVE_CACHES: list = []
-_CACHE_SCOPES: dict = {None: _LIVE_CACHES}
-_SCOPE_LOCK = threading.Lock()
-_SCOPE_TLS = threading.local()
-
-
-def _scope_list() -> list:
-    key = getattr(_SCOPE_TLS, "scope", None)
-    with _SCOPE_LOCK:
-        return _CACHE_SCOPES.setdefault(key, [])
-
-
-@contextmanager
-def cache_scope():
-    """Private cache scope for the calling thread (r15): pair-operator
-    frames registered inside the block are invisible to other scopes'
-    retire-on-entry, and the block's own retires cannot drop other
-    scopes' frames. For ``overlap_build`` member chains whose lazy
-    results must survive a concurrent operator's entry.
-
-    The scope's frames are NOT unpersisted at exit — the chain's result
-    is still lazy, and concurrent default-scope operator entries (the
-    sink's per-batch retire) must keep not seeing them. The scope stays
-    registered until the next :func:`release_caches` sweep (the bench's
-    per-slot quiesce / slot teardown) unpersists it and drops the
-    entry."""
-    token = object()
-    prev = getattr(_SCOPE_TLS, "scope", None)
-    with _SCOPE_LOCK:
-        _CACHE_SCOPES[token] = []
-    _SCOPE_TLS.scope = token
-    try:
-        yield
-    finally:
-        _SCOPE_TLS.scope = prev
+_CACHE_LOCK = threading.Lock()
 
 
 def release_caches() -> None:
-    """Unpersist checkpoints from prior pair-operator calls — EVERY
-    scope (the public sweep: bench quiesce, tests, slot teardown);
-    finished private scopes are dropped from the registry here.
-    Results of those calls stay correct — they recompute from source
-    if re-used."""
-    with _SCOPE_LOCK:
-        lists = [_CACHE_SCOPES[None]] + [
-            _CACHE_SCOPES.pop(k)
-            for k in [k for k in _CACHE_SCOPES if k is not None]
-        ]
-    for lst in lists:
-        while lst:
-            lst.pop().unpersist()
-
-
-def _retire_scope_caches() -> None:
-    """The pair-operator entry retire: drop the CURRENT scope's prior
-    frames only (the pre-r15 ``release_caches()`` at every operator
-    entry — now scope-local so concurrent chains can't drop each
-    other's)."""
-    lst = _scope_list()
-    while lst:
-        lst.pop().unpersist()
+    """Unpersist checkpoints from prior pair-operator calls (also the
+    operators' retire-on-entry). The registry is swapped out under the
+    lock and the snapshot unpersisted outside it, so concurrent callers
+    never pop the same list. Results of those calls stay correct — they
+    recompute from source if re-used."""
+    with _CACHE_LOCK:
+        frames = _LIVE_CACHES[:]
+        _LIVE_CACHES.clear()
+    for df in frames:
+        df.unpersist()
 
 
 def _keep_cache(df: DataFrame) -> DataFrame:
     df.persist(StorageLevel.MEMORY_AND_DISK)
-    _scope_list().append(df)
+    with _CACHE_LOCK:
+        _LIVE_CACHES.append(df)
     return df
 
 
@@ -605,7 +547,7 @@ def minhash_lsh_pairs(
     if emit not in ("pairs", "spanning"):
         raise ValueError(f"emit must be 'pairs' or 'spanning', got {emit!r}")
     rows = num_hashes // bands
-    _retire_scope_caches()
+    release_caches()
     sigs = minhash_signature(df, text_col, id_col, num_hashes, shingle_n)
 
     def _banded(src: DataFrame, keep: tuple = ()) -> DataFrame:
@@ -918,7 +860,7 @@ def ngram_jaccard_pairs(
     pair set is already its own spanning set."""
     if emit not in ("pairs", "spanning"):
         raise ValueError(f"emit must be 'pairs' or 'spanning', got {emit!r}")
-    _retire_scope_caches()
+    release_caches()
     tok = fan_out(df).select(
         F.col(id_col).alias("id"),
         F.explode(shingles(F.col(text_col), shingle_n)).alias("s"),
@@ -1251,7 +1193,7 @@ def simhash_pairs(
     the dense path is both exact and strictly cheaper there."""
     if emit not in ("pairs", "spanning"):
         raise ValueError(f"emit must be 'pairs' or 'spanning', got {emit!r}")
-    _retire_scope_caches()
+    release_caches()
     if sigs is None:
         sigs = simhash_signatures(df, text_col, id_col)
     # aggregation-only fill (signatures → groupBy sim) — the scalar-

@@ -64,7 +64,7 @@ from .dedup import (
     fingerprint,
     first_agreeing_band,
     minhash_signature,
-    _retire_scope_caches,
+    release_caches,
 )
 from .hashing import xxh64
 from .util import local_rows_df, spread, tracked_checkpoint
@@ -830,7 +830,7 @@ def incremental_minhash_pairs(
         # dedup-module cache contract) — without this, a foreachBatch
         # ingest loop pins one persisted band frame per micro-batch
         # forever
-        _retire_scope_caches()
+        release_caches()
         new_sigs = minhash_signature(
             new_df, text_col, id_col, num_hashes, shingle_n
         )
@@ -1453,7 +1453,7 @@ def incremental_dedup(
         if ingest_out is not None:
             ingest_out["sigs"] = None
     else:
-        _retire_scope_caches()
+        release_caches()
         new_sigs = _keep_cache(
             minhash_signature(new_df, text_col, id_col, num_hashes,
                               shingle_n)

@@ -329,14 +329,42 @@ def _quantizer_key(x):
     return float(x)
 
 
-#: Guards the one-shot-take conf flip below. RLock (not the streaming
-#: sinks' batch lock): a probe may run inside a sink batch that holds
-#: its own lock, and re-entry from the same thread must not deadlock.
-_TAKE_CONF_LOCK = threading.RLock()
+#: Serializes every session-conf bracket in the package (RLock: a
+#: bracket may open inside another on the same thread — a streaming
+#: sink's per-batch ``_batch_confs`` body runs probes under
+#: :func:`one_shot_take` and aggregates under
+#: :func:`scalar_action_confs`). Held across the block: confs are read
+#: at PLAN time throughout it, and two concurrent brackets (streaming
+#: batches of two queries on one session) would otherwise restore each
+#: other's transient values. Parallelism-only impact, never results.
+_CONF_LOCK = threading.RLock()
 _INITIAL_PARTS_CONF = "spark.sql.limit.initialNumPartitions"
 
 
 @contextmanager
+def _conf_bracket(spark, confs: dict):
+    """Set ``confs`` on the session for the block and restore the
+    previous values on exit — raising body included; a conf that was
+    unset before is unset again. An empty ``confs`` is a no-op that
+    takes no lock."""
+    if not confs:
+        yield
+        return
+    conf = spark.conf
+    with _CONF_LOCK:
+        prev = {k: conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                conf.set(k, v)
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    conf.unset(k)
+                else:
+                    conf.set(k, v)
+
+
 def one_shot_take(spark, parts: int = 64):
     """Make ``take()`` scan ``parts`` partitions in its FIRST job for
     the duration of the block (restored on exit, lock-guarded).
@@ -350,49 +378,9 @@ def one_shot_take(spark, parts: int = 64):
     scale-up retries). 64 one-shots
     every trigger-sized frame while keeping the overscan of a
     pathological cap-overflow take bounded to one pass."""
-    with _TAKE_CONF_LOCK:
-        prev = spark.conf.get(_INITIAL_PARTS_CONF, None)
-        spark.conf.set(_INITIAL_PARTS_CONF, str(int(parts)))
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(_INITIAL_PARTS_CONF)
-            else:
-                spark.conf.set(_INITIAL_PARTS_CONF, prev)
+    return _conf_bracket(spark, {_INITIAL_PARTS_CONF: str(int(parts))})
 
 
-#: Guards the micro-plan conf bracket below (RLock: a micro-commit can
-#: run inside a caller that already holds it, e.g. a bundle flush
-#: committing several staged edits back-to-back on one thread).
-_MICRO_PLAN_LOCK = threading.RLock()
-
-#: Sessions with an :func:`overlap_build` in flight (id(session) →
-#: count). While a session is registered, the AQE conf brackets below
-#: become NO-OPS for that session (r15, closing the overlap × bracket
-#: race): a bracket that flipped the session-global
-#: ``spark.sql.adaptive.enabled`` would make SIBLING chains' unbracketed
-#: plan compilations timing-dependent — a deliberately-AQE-on fill
-#: could silently compile with AQE off. Keeping AQE ON during overlap
-#: is the conservative posture (the bracket's only job is shaving
-#: scheduler latency, and overlap hides that latency anyway); results
-#: are identical either way. Registration keys on the PYTHON session
-#: object id — safe because this package's sessions are module-cached
-#: singletons and streaming foreachBatch bodies receive per-query JVM
-#: clone sessions (verified: conf-isolated), which are never the
-#: registered object, so sink batch brackets keep their posture even
-#: while a foreground overlap is live.
-_OVERLAP_SESSIONS: dict = {}
-
-
-def _bracket_is_noop(spark) -> bool:
-    """True while an overlap_build is in flight on ``spark`` — AQE
-    brackets must not flip session-global conf under sibling chains.
-    Caller holds ``_MICRO_PLAN_LOCK``."""
-    return _OVERLAP_SESSIONS.get(id(spark), 0) > 0
-
-
-@contextmanager
 def micro_plan_confs(spark, parts: int = 4):
     """AQE off + a narrow static shuffle width for the duration of the
     block (restored on exit, lock-guarded) — the streaming sinks'
@@ -406,71 +394,13 @@ def micro_plan_confs(spark, parts: int = 4):
     whose data CAN be large must not enter the bracket — size-gate
     first. The lock serializes concurrent brackets (and concurrent
     plan-time conf reads of other threads see the flipped value for
-    the duration — parallelism-only impact, never results).
-
-    NO-OP while an :func:`overlap_build` is in flight on this session
-    (r15): flipping session-global conf under sibling chains would make
-    their plan posture timing-dependent."""
-    with _MICRO_PLAN_LOCK:
-        if _bracket_is_noop(spark):
-            yield
-            return
-        prev_shuf = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(parts)))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_shuf)
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    the duration — parallelism-only impact, never results)."""
+    return _conf_bracket(spark, {
+        "spark.sql.shuffle.partitions": str(int(parts)),
+        "spark.sql.adaptive.enabled": "false",
+    })
 
 
-def overlap_build(*thunks, workers: int = 3, spark=None) -> list:
-    """Run independent member-builder thunks concurrently and return
-    their results in SUBMISSION order (guide §2.6: Spark happily runs
-    several jobs at once inside one application; member chains that
-    only share read-only inputs are sequential purely because driver
-    code calls their eager actions — checkpoint fills, sizing
-    collects — back to back). Wall becomes the max chain instead of
-    the sum. 2-3 workers is plenty: enough to fill each chain's
-    driver-latency gaps with another chain's tasks, not so many that
-    they fight for executors. Results must be order-insensitive by
-    construction (each thunk a pure function of its inputs —
-    deterministic frames/checkpoints); the caller assembles them in
-    the same fixed order as the sequential formulation, so the output
-    plan is identical. Exceptions re-raise at collection, preserving
-    the sequential error surface.
-
-    ``spark`` (r15): the session the chains compile against. While the
-    overlap is in flight, AQE conf brackets on that session
-    (:func:`scalar_action_confs` / :func:`micro_plan_confs`) become
-    no-ops so sibling chains' plan posture is deterministic (always
-    the session's steady-state AQE-on). Registration takes
-    ``_MICRO_PLAN_LOCK``, so an in-flight bracket fully exits (conf
-    restored) before any chain starts compiling."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    key = None
-    if spark is not None:
-        key = id(spark)
-        with _MICRO_PLAN_LOCK:
-            _OVERLAP_SESSIONS[key] = _OVERLAP_SESSIONS.get(key, 0) + 1
-    try:
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            futs = [pool.submit(t) for t in thunks]
-            return [f.result() for f in futs]
-    finally:
-        if key is not None:
-            with _MICRO_PLAN_LOCK:
-                n = _OVERLAP_SESSIONS.get(key, 0) - 1
-                if n > 0:
-                    _OVERLAP_SESSIONS[key] = n
-                else:
-                    _OVERLAP_SESSIONS.pop(key, None)
-
-
-@contextmanager
 def scalar_action_confs(spark):
     """AQE off — shuffle width UNTOUCHED — for the duration of one
     scalar/metadata-sized aggregate action (restored on exit,
@@ -495,20 +425,8 @@ def scalar_action_confs(spark):
     a partial-agg-first report over a source scan. Do NOT use when
     the input plan carries joins whose strategy AQE should pick at
     runtime (e.g. ``weighted_sample``'s generic total over an
-    arbitrary scored plan stays on AQE).
-
-    NO-OP while an :func:`overlap_build` is in flight on this session
-    (r15) — see :func:`micro_plan_confs`."""
-    with _MICRO_PLAN_LOCK:
-        if _bracket_is_noop(spark):
-            yield
-            return
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    arbitrary scored plan stays on AQE)."""
+    return _conf_bracket(spark, {"spark.sql.adaptive.enabled": "false"})
 
 
 #: local_rows_df falls back to createDataFrame past this many CELLS:
@@ -540,7 +458,8 @@ def _sql_lit(v) -> str:
         return f"CAST('{r}' AS DOUBLE)"
     if isinstance(v, str):
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    if isinstance(v, (list, tuple)):
+    # a Row is a tuple too, but its value is a struct, not an array
+    if isinstance(v, (list, tuple)) and not hasattr(v, "__fields__"):
         return "ARRAY(" + ",".join(_sql_lit(x) for x in v) + ")"
     raise TypeError(
         f"local_rows_df cannot inline a {type(v).__name__} literal"
@@ -568,7 +487,10 @@ def local_rows_df(spark, rows, schema: str):
     honored — values for non-nullable fields must be non-NULL). Use
     for SMALL literal tables only (rule snapshots, driver-computed id
     lists, probe batches, single-row tags): the whole relation lives
-    in the plan and on the driver."""
+    in the plan and on the driver. Empty tables, tables past
+    ``_LOCAL_ROWS_CELL_CAP`` and rows holding a value SQL text does not
+    carry (date, datetime, Decimal, bytes, nested Row/dict) are
+    parallelized instead — ``createDataFrame`` semantics either way."""
     from pyspark.sql import types as _T
 
     fields = (
@@ -581,22 +503,27 @@ def local_rows_df(spark, rows, schema: str):
         for row in rows
         for v in row
     )
-    if not rows or cells > _LOCAL_ROWS_CELL_CAP:
-        if not rows:
-            return spark.createDataFrame(rows, schema)
-        # oversized fallback: parallelize with FEW slices.
-        # createDataFrame(list) defaults to defaultParallelism (32)
-        # slices, and every consuming job pays ~130 ms of
-        # Python-runner overhead PER SLICE (measured r15 — a 1700-row
-        # 32-slice frame cost ~4 s per write/scan); a handful of
-        # slices keeps the conversion parallel enough at this size
-        # with ~100× less runner overhead.
+    if not rows:
+        return spark.createDataFrame(rows, schema)
+    tuples = None
+    if cells <= _LOCAL_ROWS_CELL_CAP:
+        try:
+            tuples = [
+                "(" + ",".join(_sql_lit(v) for v in row) + ")"
+                for row in rows
+            ]
+        except TypeError:
+            pass  # date/Decimal/bytes/struct values: parallelize below
+    if tuples is None:
+        # parallelize with FEW slices. createDataFrame(list) defaults
+        # to defaultParallelism (32) slices, and every consuming job
+        # pays ~130 ms of Python-runner overhead PER SLICE (measured
+        # r15 — a 1700-row 32-slice frame cost ~4 s per write/scan); a
+        # handful of slices keeps the conversion parallel enough at
+        # this size with ~100× less runner overhead.
         n_slices = max(1, min(8, cells // _LOCAL_ROWS_CELL_CAP))
         rdd = spark.sparkContext.parallelize(list(rows), n_slices)
         return spark.createDataFrame(rdd, schema)
-    tuples = [
-        "(" + ",".join(_sql_lit(v) for v in row) + ")" for row in rows
-    ]
     raw_cols = ", ".join(f"c{j}" for j in range(len(fields)))
     # IF(TRUE, c, NULL) makes a column NULLABLE in the ANALYZED plan
     # (which is what df.schema reports — exact createDataFrame parity,

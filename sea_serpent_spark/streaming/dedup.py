@@ -35,8 +35,6 @@ Design:
 from __future__ import annotations
 
 import os
-import threading
-from contextlib import contextmanager
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -44,21 +42,13 @@ from pyspark.sql import types as T
 
 from ..operators.hashing import MINHASH_COEFFS, P, h32
 
-#: Guards the per-batch session-conf flip (shuffle partitions + fanout)
-#: shared by BOTH sinks in this module. Within one streaming query the
-#: batches run serially, but two concurrent queries on the same
-#: SparkSession would otherwise race the set/restore and one could
-#: restore the other's transient value (r12 advice). Held across the
-#: whole batch body — the conf is read at PLAN time throughout it —
-#: which serializes concurrent conf-flipping batches; parallelism-only
-#: impact, results unaffected either way.
-_CONF_FLIP_LOCK = threading.Lock()
 
-
-@contextmanager
 def _batch_confs(spark, batch_parallelism: int | None):
     """Apply ``batch_parallelism`` to the session confs for one batch,
-    restoring the previous values on exit (no-op when unset).
+    restoring the previous values on exit (no-op when unset). Shared by
+    BOTH sinks in this module; the bracket's lock serializes two
+    concurrent queries' batches on one session, whose set/restore
+    would otherwise interleave (r12 advice).
 
     Also disables ADAPTIVE execution for the batch (r13): AQE
     materializes every exchange as its own Spark job to re-plan at
@@ -67,29 +57,17 @@ def _batch_confs(spark, batch_parallelism: int | None):
     shuffle width this knob just pinned statically (measured:
     20 → 9 jobs/probe, identical survivors). Backfill-sized batches
     should leave ``batch_parallelism`` unset and keep AQE."""
-    if not batch_parallelism:
-        yield
-        return
-    from ..operators.util import FANOUT_CONF
+    from ..operators.util import FANOUT_CONF, _conf_bracket
 
-    with _CONF_FLIP_LOCK:
-        prev_fan = spark.conf.get(FANOUT_CONF, None)
-        prev_shuf = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set(FANOUT_CONF, str(int(batch_parallelism)))
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(int(batch_parallelism))
-        )
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            yield
-        finally:
-            if prev_fan is None:
-                spark.conf.unset(FANOUT_CONF)
-            else:
-                spark.conf.set(FANOUT_CONF, prev_fan)
-            spark.conf.set("spark.sql.shuffle.partitions", prev_shuf)
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    confs = {}
+    if batch_parallelism:
+        n = str(int(batch_parallelism))
+        confs = {
+            FANOUT_CONF: n,
+            "spark.sql.shuffle.partitions": n,
+            "spark.sql.adaptive.enabled": "false",
+        }
+    return _conf_bracket(spark, confs)
 
 
 def streaming_minhash_signature(
@@ -251,8 +229,9 @@ def incremental_dedup_sink(
     bucket, seeded layout's ``key_buckets`` is auto-discovered from the
     sidecar unless overridden here) each batch reads only the bucket
     directories its documents touch — per-batch cost stays ~flat as the
-    index accumulates instead of growing with history
-    (tools/rehearse_r9.py measures this). Survivor band rows are
+    index accumulates instead of growing with history (measured in
+    BENCH_NOTES.md §Round-9 diagnoses, "Prunable band-index layout").
+    Survivor band rows are
     appended in the same layout; pass ``compact_every=N`` to fold each
     bucket's accumulated small per-batch files back into one sorted
     file after every N batches (serial batches make the rewrite+swap

@@ -325,15 +325,17 @@ def start_to_memory(stream: DataFrame, name: str, spark: SparkSession,
     start several drains back-to-back from one thread with no conf
     race. Read the sink with ``spark.table(name)`` after
     ``q.awaitTermination()``."""
-    conf = spark.conf
-    old = conf.get("spark.sql.shuffle.partitions", "200")
+    from ..operators.util import _conf_bracket
+
+    confs = {}
     if state_partitions:
+        old = spark.conf.get("spark.sql.shuffle.partitions", "200")
         try:
-            clamp = str(min(int(old), int(state_partitions)))
+            clamp = min(int(old), int(state_partitions))
         except (TypeError, ValueError):
-            clamp = str(state_partitions)
-        conf.set("spark.sql.shuffle.partitions", clamp)
-    try:
+            clamp = state_partitions
+        confs = {"spark.sql.shuffle.partitions": str(clamp)}
+    with _conf_bracket(spark, confs):
         return (
             stream.writeStream.format("memory")
             .queryName(name)
@@ -343,9 +345,6 @@ def start_to_memory(stream: DataFrame, name: str, spark: SparkSession,
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        if state_partitions:
-            conf.set("spark.sql.shuffle.partitions", old)
 
 
 def run_to_memory(stream: DataFrame, name: str, spark: SparkSession,
@@ -361,26 +360,7 @@ def run_to_memory(stream: DataFrame, name: str, spark: SparkSession,
     micro-batch for a dev-scale drain. The conf is restored afterwards
     (Spark snapshots it into the query at start). Pass ``None`` to keep
     the session value (production streams size this deliberately)."""
-    conf = spark.conf
-    old = conf.get("spark.sql.shuffle.partitions", "200")
-    if state_partitions:
-        try:
-            clamp = str(min(int(old), int(state_partitions)))
-        except (TypeError, ValueError):
-            clamp = str(state_partitions)
-        conf.set("spark.sql.shuffle.partitions", clamp)
-    try:
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(
-                mode or ("complete" if stream.isStreaming else "append")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if state_partitions:
-            conf.set("spark.sql.shuffle.partitions", old)
+    start_to_memory(
+        stream, name, spark, mode=mode, state_partitions=state_partitions
+    ).awaitTermination()
     return spark.table(name)

@@ -381,13 +381,6 @@ def q70_profile_qa(spark, sf_dir):
     lnull = F.lit(None).cast("long")
     dnull = F.lit(None).cast("double")
 
-    # r14, guide §2.6: the five report members are independent (they
-    # share only read-only scans) but each front-loads eager driver
-    # work — expect's one-pass collect, skew's sizing count, diff's
-    # uniqueness probe, the corpus token checkpoint, the funnel's
-    # boundary counts. Build them concurrently (overlap_build) and
-    # assemble the SAME members in the SAME union order — the output
-    # plan and rows are identical to the sequential formulation.
     def _m_expect():
         return expect(
             o,
@@ -503,10 +496,8 @@ def q70_profile_qa(spark, sf_dir):
             dnull.alias("d2"),
         )
 
-    from .operators.util import overlap_build
-
-    ex, sk, dd, cp, fun = overlap_build(
-        _m_expect, _m_skew, _m_diff, _m_corpus, _m_funnel, spark=spark
+    ex, sk, dd, cp, fun = (
+        _m_expect(), _m_skew(), _m_diff(), _m_corpus(), _m_funnel()
     )
     return (
         ex.unionByName(sk).unionByName(dd)
@@ -816,15 +807,11 @@ def q41_ann_topk(spark, sf_dir):
     idx_path = os.path.join(
         tempfile.gettempdir(), "sea_serpent_scratch", f"ivf{sf_tag}", "idx"
     )
-    # r14, guide §2.6: the main-index chain (build idx_path → ivfp /
-    # ivfpq probes) and the append-lifecycle chain below (build
-    # inc_path → append → pre-compaction probes → compact → ivfc) are
-    # path-independent — separate scratch dirs, separate writer
-    # leases, shared inputs read-only — so their eager builds overlap
-    # (overlap_build): wall = max of the chains, not the sum. Probe
-    # construction stays inside its chain (a probe resolves its
-    # index's sidecar at construction, and ivfa/ivfaq must pin the
-    # PRE-compaction generation, so in-thunk order is the contract).
+    # Two chains: the main index (build idx_path → ivfp / ivfpq probes)
+    # and the append lifecycle below (build inc_path → append →
+    # pre-compaction probes → compact → ivfc). In-chain order is the
+    # contract: a probe resolves its index's sidecar at construction,
+    # and ivfa/ivfaq must pin the PRE-compaction generation.
     def _chain_main():
         build_ivf_index(
             ed, idx_path, centroids=SEMDEDUP_CENTROIDS,
@@ -905,11 +892,8 @@ def q41_ann_topk(spark, sf_dir):
         ).withColumn("method", F.lit("ivfc"))
         return ivfa, ivfaq, ivfc
 
-    from .operators.util import overlap_build
-
-    (ivfp, ivfpq), (ivfa, ivfaq, ivfc) = overlap_build(
-        _chain_main, _chain_inc, workers=2, spark=spark
-    )
+    ivfp, ivfpq = _chain_main()
+    ivfa, ivfaq, ivfc = _chain_inc()
     return (
         brute.unionByName(lsh).unionByName(mp)
         .unionByName(ivf).unionByName(pq).unionByName(ivfp)
@@ -963,129 +947,114 @@ def q43_embedding_near_dup(spark, sf_dir):
         incremental_semantic_dedup as _isd,
         read_ivf_index as _rivf,
     )
-    from .operators.dedup import cache_scope
-    from .operators.util import overlap_build
     from .streaming.dedup import incremental_semantic_dedup_sink
 
     sf_tag = "".join(
         ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")
     )
 
-    # Two independent chains, overlapped (r15 — the q41 treatment).
-    # The INGEST chain keeps its documented internal ordering: the
-    # seed build, then inc (incremental_semantic_dedup retires the
-    # default cache scope on entry), then the drain whose per-batch
-    # _isd calls retire again — all entry-ordered within this one
-    # chain. The BATCH-member chain (pair/sem) builds under its own
-    # cache_scope, so its still-lazy persisted frames (the spanning
-    # path's group cache) are invisible to the ingest chain's
-    # retire-on-entry — the +11 s recompute the old sequential
-    # ordering constraint existed to avoid now cannot happen by
-    # construction, and the two chains only share read-only inputs.
-    def _chain_ingest():
-        semi = _os.path.join(
-            _tf.gettempdir(), "sea_serpent_scratch", f"seminc{sf_tag}"
-        )
-        _sh.rmtree(semi, ignore_errors=True)
-        _bivf(ed.where(F.col("vec_id") < 300), semi,
-              centroids=SEMDEDUP_CENTROIDS)
-        inc = _isd(
-            ed.where(F.col("vec_id") >= 300), semi, threshold=0.45
-        ).select(
-            F.col("vec_id").alias("id_a"),
-            F.lit(None).cast("long").alias("id_b"),
-            F.lit(None).cast("double").alias("cos"),
-            F.lit("inc").alias("op"),
-        )
-        sroot = _os.path.join(
-            _tf.gettempdir(), "sea_serpent_scratch", f"semsink{sf_tag}"
-        )
-        _sh.rmtree(sroot, ignore_errors=True)
-        # the sink REUSES inc's seed index (identical history + pinned
-        # centroids — a second build was pure slot cost, r13): safe
-        # because inc ran EAGERLY above and its returned frame is
-        # index-independent on both probe paths (driver path → isin
-        # predicate; distributed fallback → checkpointed loser set), so
-        # the drain's tail appends below cannot reach back into it; the
-        # member rebuilds `semi` fresh at entry, so warm re-runs see
-        # the same pristine seed
-        sidx = semi
-        sout = _os.path.join(sroot, "out")
-        delta_dir = _os.path.join(sroot, "delta")
-        _os.makedirs(delta_dir, exist_ok=True)
-        for i, (lo, hi) in enumerate(((300, 400), (400, 500))):
-            stage = _os.path.join(sroot, f"_stage{i}")
-            (
-                ed.where(
-                    (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            part = next(
-                f for f in _os.listdir(stage) if f.endswith(".parquet")
-            )
-            dst = _os.path.join(delta_dir, f"batch{i}.parquet")
-            _os.replace(_os.path.join(stage, part), dst)
-            t = 1_000_000_000 + i * 1000  # strict per-file mtime order
-            _os.utime(dst, (t, t))
-            _sh.rmtree(stage, ignore_errors=True)
-        sschema = ed.where(F.col("vec_id") < 0).schema
+    # The ingest members are built FIRST: incremental_semantic_dedup
+    # retires prior pair-operator caches on entry (the dedup-module
+    # contract), and so does each sink batch's call, which would drop
+    # the still-LAZY pair/sem members' persisted frames if they were
+    # built before — correct but recomputed, measured as +11 s on this
+    # slot. inc's own output is cache-independent once built (the
+    # loser set is an eager checkpoint), so the later members can
+    # never hurt it.
+    semi = _os.path.join(
+        _tf.gettempdir(), "sea_serpent_scratch", f"seminc{sf_tag}"
+    )
+    _sh.rmtree(semi, ignore_errors=True)
+    _bivf(ed.where(F.col("vec_id") < 300), semi,
+          centroids=SEMDEDUP_CENTROIDS)
+    inc = _isd(
+        ed.where(F.col("vec_id") >= 300), semi, threshold=0.45
+    ).select(
+        F.col("vec_id").alias("id_a"),
+        F.lit(None).cast("long").alias("id_b"),
+        F.lit(None).cast("double").alias("cos"),
+        F.lit("inc").alias("op"),
+    )
+    sroot = _os.path.join(
+        _tf.gettempdir(), "sea_serpent_scratch", f"semsink{sf_tag}"
+    )
+    _sh.rmtree(sroot, ignore_errors=True)
+    # the sink REUSES inc's seed index (identical history + pinned
+    # centroids — a second build was pure slot cost, r13): safe
+    # because inc ran EAGERLY above and its returned frame is
+    # index-independent on both probe paths (driver path → isin
+    # predicate; distributed fallback → checkpointed loser set), so
+    # the drain's tail appends below cannot reach back into it; the
+    # member rebuilds `semi` fresh at entry, so warm re-runs see
+    # the same pristine seed
+    sidx = semi
+    sout = _os.path.join(sroot, "out")
+    delta_dir = _os.path.join(sroot, "delta")
+    _os.makedirs(delta_dir, exist_ok=True)
+    for i, (lo, hi) in enumerate(((300, 400), (400, 500))):
+        stage = _os.path.join(sroot, f"_stage{i}")
         (
-            spark.readStream.schema(sschema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(delta_dir)
-            .writeStream.foreachBatch(incremental_semantic_dedup_sink(
-                sidx, sout, threshold=0.45, batch_parallelism=8,
-            ))
-            .option("checkpointLocation", _os.path.join(sroot, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        out_sink = spark.read.parquet(sout).select(
-            F.col("vec_id").alias("id_a"),
-            F.lit(None).cast("long").alias("id_b"),
-            F.lit(None).cast("double").alias("cos"),
-            F.lit("sink").alias("op"),
-        )
-        n_idx = (
-            _rivf(spark, sidx)[0].select("vec_id").distinct().count()
-        )
-        from .operators.util import local_rows_df
-
-        out_idx = local_rows_df(
-            spark, [(int(n_idx),)], "id_a long"
-        ).select(
-            "id_a",
-            F.lit(None).cast("long").alias("id_b"),
-            F.lit(None).cast("double").alias("cos"),
-            F.lit("sink_idx").alias("op"),
-        )
-        return inc, out_sink, out_idx
-
-    def _chain_batch():
-        with cache_scope():
-            pairs = S.embedding_near_dup_pairs(
-                e, threshold=0.45, nbits=0
-            ).withColumn("op", F.lit("pair"))
-            sem = S.semantic_dedup(
-                ed,
-                threshold=0.45,
-                centroids=SEMDEDUP_CENTROIDS,
-                keep="far_from_centroid",
-                nbits=0,
-            ).select(
-                F.col("vec_id").alias("id_a"),
-                F.lit(None).cast("long").alias("id_b"),
-                F.lit(None).cast("double").alias("cos"),
-                F.lit("semdedup").alias("op"),
+            ed.where(
+                (F.col("vec_id") >= lo) & (F.col("vec_id") < hi)
             )
-        return pairs, sem
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(stage)
+        )
+        part = next(
+            f for f in _os.listdir(stage) if f.endswith(".parquet")
+        )
+        dst = _os.path.join(delta_dir, f"batch{i}.parquet")
+        _os.replace(_os.path.join(stage, part), dst)
+        t = 1_000_000_000 + i * 1000  # strict per-file mtime order
+        _os.utime(dst, (t, t))
+        _sh.rmtree(stage, ignore_errors=True)
+    sschema = ed.where(F.col("vec_id") < 0).schema
+    (
+        spark.readStream.schema(sschema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(delta_dir)
+        .writeStream.foreachBatch(incremental_semantic_dedup_sink(
+            sidx, sout, threshold=0.45, batch_parallelism=8,
+        ))
+        .option("checkpointLocation", _os.path.join(sroot, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    out_sink = spark.read.parquet(sout).select(
+        F.col("vec_id").alias("id_a"),
+        F.lit(None).cast("long").alias("id_b"),
+        F.lit(None).cast("double").alias("cos"),
+        F.lit("sink").alias("op"),
+    )
+    n_idx = (
+        _rivf(spark, sidx)[0].select("vec_id").distinct().count()
+    )
+    from .operators.util import local_rows_df
 
-    (inc, out_sink, out_idx), (pairs, sem) = overlap_build(
-        _chain_ingest, _chain_batch, workers=2, spark=spark
+    out_idx = local_rows_df(
+        spark, [(int(n_idx),)], "id_a long"
+    ).select(
+        "id_a",
+        F.lit(None).cast("long").alias("id_b"),
+        F.lit(None).cast("double").alias("cos"),
+        F.lit("sink_idx").alias("op"),
+    )
+    pairs = S.embedding_near_dup_pairs(
+        e, threshold=0.45, nbits=0
+    ).withColumn("op", F.lit("pair"))
+    sem = S.semantic_dedup(
+        ed,
+        threshold=0.45,
+        centroids=SEMDEDUP_CENTROIDS,
+        keep="far_from_centroid",
+        nbits=0,
+    ).select(
+        F.col("vec_id").alias("id_a"),
+        F.lit(None).cast("long").alias("id_b"),
+        F.lit(None).cast("double").alias("cos"),
+        F.lit("semdedup").alias("op"),
     )
     return (
         pairs.unionByName(sem).unionByName(inc)
@@ -1255,14 +1224,6 @@ def q60_deterministic_split(spark, sf_dir):
     docs = df(spark, sf_dir, "documents")
     null_v = F.lit(None).cast("double").alias("v")
 
-    # r14, guide §2.6: the member chains below are independent (they
-    # share only the read-only docs scan) but each pays eager driver
-    # work — persist/checkpoint fills and sizing collects — that was
-    # sequential purely because this builder called them back to back.
-    # Build the eager chains concurrently (overlap_build, 3 workers)
-    # and assemble the SAME members into the SAME union order, so the
-    # output plan and rows are identical to the sequential
-    # formulation; the lazy members (strat/mix/cap) stay inline.
     def _chain_packed():
         out = deterministic_split(
             docs, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}
@@ -1388,11 +1349,9 @@ def q60_deterministic_split(spark, sf_dir):
             F.lit("wsamp").alias("op"),
         )
 
-    from .operators.util import overlap_build
-
-    packed, seqs, temp, (dsir, xent), wsamp = overlap_build(
-        _chain_packed, _chain_seqs, _chain_temp, _chain_scores,
-        _chain_wsamp, spark=spark,
+    packed, seqs, temp, (dsir, xent), wsamp = (
+        _chain_packed(), _chain_seqs(), _chain_temp(), _chain_scores(),
+        _chain_wsamp(),
     )
     # round 11 — op='mix': mix_corpora survivors (training-mix recipe:
     # keep 100% of src0, 30% of src1, 65% of src2, drop the rest).

@@ -1,24 +1,30 @@
-"""r15: overlap_build × AQE-conf-bracket determinism, and the
-thread-scoped pair-operator cache registries.
+"""Session-conf brackets and the pair-operator cache registry.
 
-The race these pin down (r14 verdict item 5 / advice): a bracket that
-flips the session-global ``spark.sql.adaptive.enabled`` while an
-``overlap_build`` sibling chain compiles a plan would silently compile
-that plan with AQE off — posture nondeterminism (never results). The
-fix: while an overlap is registered on a session, the brackets are
-no-ops, so sibling compilations always see the steady-state conf.
+Every session-conf flip in the package goes through one bracket
+(``operators.util._conf_bracket``): it sets a dict of confs, restores
+the previous values on exit — unsetting confs that were absent — and
+holds one re-entrant lock, so a streaming batch body can open further
+brackets on its own thread.
 """
 
+import sys
 import threading
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from sea_serpent_spark.operators.util import (
+    FANOUT_CONF,
     micro_plan_confs,
-    overlap_build,
+    one_shot_take,
     scalar_action_confs,
 )
+from sea_serpent_spark.streaming.dedup import _batch_confs
+
+AQE = "spark.sql.adaptive.enabled"
+SHUF = "spark.sql.shuffle.partitions"
+INITIAL_PARTS = "spark.sql.limit.initialNumPartitions"
 
 
 def _physical(df) -> str:
@@ -33,6 +39,10 @@ def _shuffle_plan(spark):
     )
 
 
+def _snapshot(spark, keys):
+    return {k: spark.conf.get(k, None) for k in keys}
+
+
 def test_bracket_flips_aqe_outside_overlap(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     with scalar_action_confs(spark):
@@ -41,96 +51,147 @@ def test_bracket_flips_aqe_outside_overlap(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
-def test_overlap_sibling_plan_stays_adaptive(spark):
-    """A sibling chain compiling WHILE another chain sits inside a
-    scalar_action_confs bracket must still plan adaptively."""
-    in_bracket = threading.Event()
-    sibling_done = threading.Event()
+_BRACKETS = {
+    "scalar_action_confs": (
+        lambda s: scalar_action_confs(s), {AQE: "false"},
+    ),
+    "micro_plan_confs": (
+        lambda s: micro_plan_confs(s, parts=3), {AQE: "false", SHUF: "3"},
+    ),
+    "one_shot_take": (
+        lambda s: one_shot_take(s, parts=5), {INITIAL_PARTS: "5"},
+    ),
+    "batch_confs": (
+        lambda s: _batch_confs(s, 6),
+        {AQE: "false", SHUF: "6", FANOUT_CONF: "6"},
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BRACKETS))
+def test_named_bracket_sets_and_restores(spark, name):
+    make, inside = _BRACKETS[name]
+    keys = [AQE, SHUF, INITIAL_PARTS, FANOUT_CONF]
+    before = _snapshot(spark, keys)
+    # the unset-when-absent case: neither conf is set on the session
+    assert before[INITIAL_PARTS] is None
+    assert before[FANOUT_CONF] is None
+    with make(spark):
+        for k, v in inside.items():
+            assert spark.conf.get(k, None) == v
+    assert _snapshot(spark, keys) == before
+
+
+def test_batch_confs_without_parallelism_is_noop(spark):
+    keys = [AQE, SHUF, FANOUT_CONF]
+    before = _snapshot(spark, keys)
+    with _batch_confs(spark, None):
+        assert _snapshot(spark, keys) == before
+    assert _snapshot(spark, keys) == before
+
+
+@pytest.mark.parametrize("name", sorted(_BRACKETS))
+def test_bracket_restores_when_body_raises(spark, name):
+    make, _ = _BRACKETS[name]
+    keys = [AQE, SHUF, INITIAL_PARTS, FANOUT_CONF]
+    before = _snapshot(spark, keys)
+    with pytest.raises(RuntimeError, match="boom"):
+        with make(spark):
+            raise RuntimeError("boom")
+    assert _snapshot(spark, keys) == before
+
+
+def test_nested_brackets_in_batch_body_do_not_deadlock(spark):
+    """A sink batch body (``_batch_confs``) that runs a capped probe
+    take (``one_shot_take``) and then a scalar aggregate
+    (``scalar_action_confs``) re-enters the bracket lock on one
+    thread; each inner exit restores the batch's values."""
+    keys = [AQE, SHUF, INITIAL_PARTS, FANOUT_CONF]
+    before = _snapshot(spark, keys)
     seen: dict = {}
 
-    def _bracketed():
-        with scalar_action_confs(spark):
-            seen["conf_in_bracket"] = spark.conf.get(
-                "spark.sql.adaptive.enabled"
-            )
-            in_bracket.set()
-            assert sibling_done.wait(timeout=30)
-        return "a"
+    def _batch():
+        with _batch_confs(spark, 4):
+            with one_shot_take(spark, parts=7):
+                seen["take"] = spark.conf.get(INITIAL_PARTS, None)
+                with scalar_action_confs(spark):
+                    seen["n"] = spark.range(10).count()
+                    seen["aqe"] = spark.conf.get(AQE)
+            seen["after_take"] = spark.conf.get(INITIAL_PARTS, None)
+            seen["shuf"] = spark.conf.get(SHUF)
 
-    def _sibling():
-        assert in_bracket.wait(timeout=30)
-        try:
-            seen["sibling_plan"] = _physical(_shuffle_plan(spark))
-        finally:
-            sibling_done.set()
-        return "b"
-
-    out = overlap_build(_bracketed, _sibling, workers=2, spark=spark)
-    assert out == ["a", "b"]
-    # the bracket no-opped: conf never flipped under the sibling
-    assert seen["conf_in_bracket"] == "true"
-    assert "AdaptiveSparkPlan" in seen["sibling_plan"]
-    # registration is refcounted away: brackets flip again afterwards
-    with micro_plan_confs(spark, parts=3):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
-def test_overlap_registration_survives_thunk_error(spark):
-    with pytest.raises(RuntimeError, match="boom"):
-        overlap_build(
-            lambda: (_ for _ in ()).throw(RuntimeError("boom")),
-            spark=spark,
-        )
-    with scalar_action_confs(spark):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
-def test_cache_scope_isolation(spark):
-    """Frames kept inside a cache_scope survive another thread's
-    operator-entry retire; the global release_caches sweep still drops
-    every scope."""
-    from sea_serpent_spark.operators.dedup import (
-        _keep_cache,
-        _retire_scope_caches,
-        cache_scope,
-        release_caches,
-    )
-
-    release_caches()  # clean slate
-    scoped: dict = {}
-
-    def _chain():
-        with cache_scope():
-            dfx = _keep_cache(spark.range(100).withColumn("v", F.lit(1)))
-            dfx.count()
-            scoped["df"] = dfx
-
-    t = threading.Thread(target=_chain)
+    t = threading.Thread(target=_batch, daemon=True)
     t.start()
     t.join(timeout=60)
-    assert "df" in scoped
-    assert scoped["df"].storageLevel.useMemory
-    # a DEFAULT-scope operator entry (what a concurrent sink batch
-    # does) must not see the scoped frame
-    _retire_scope_caches()
-    assert scoped["df"].storageLevel.useMemory
-    # the quiesce sweep drops every scope, including finished ones
-    release_caches()
-    assert not scoped["df"].storageLevel.useMemory
+    assert not t.is_alive(), "nested brackets deadlocked"
+    assert seen == {
+        "take": "7", "n": 10, "aqe": "false", "after_take": None,
+        "shuf": "4",
+    }
+    assert _snapshot(spark, keys) == before
 
 
 def test_default_scope_retire_still_works(spark):
+    """A pair operator's entry retires the previous call's frames."""
     from sea_serpent_spark.operators.dedup import (
         _keep_cache,
-        _retire_scope_caches,
+        minhash_lsh_pairs,
         release_caches,
     )
 
     release_caches()
     dfx = _keep_cache(spark.range(10))
     assert dfx.storageLevel.useMemory
-    _retire_scope_caches()
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e")], "doc_id long, text string"
+    )
+    minhash_lsh_pairs(docs)
     assert not dfx.storageLevel.useMemory
+    release_caches()
+
+
+def test_release_caches_races_keep_cache(spark):
+    """Four threads interleave ``_keep_cache`` and ``release_caches``
+    over 200 materialized frames: no thread raises, and after a final
+    sweep no persisted RDD is left behind."""
+    from sea_serpent_spark.operators.dedup import (
+        _keep_cache,
+        release_caches,
+    )
+
+    jsc = spark.sparkContext._jsc
+    release_caches()
+    baseline = jsc.getPersistentRDDs().size()
+    errors: list = []
+    start = threading.Barrier(4)
+
+    def _worker(w: int) -> None:
+        try:
+            start.wait(timeout=60)
+            for i in range(50):
+                lo = 1000 * (50 * w + i)  # distinct plans, no cache reuse
+                dfx = spark.range(lo, lo + 3)
+                # fill the cache BEFORE registering: a frame released
+                # while its own first action builds the cache is leaked
+                # by Spark itself (the release contract forbids it)
+                dfx.persist(StorageLevel.MEMORY_AND_DISK).count()
+                _keep_cache(dfx)
+                if i % 2:
+                    release_caches()
+        except Exception as exc:  # noqa: BLE001 - surfaced below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=_worker, args=(w,)) for w in range(4)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the registry updates finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    release_caches()
+    assert errors == []
+    assert jsc.getPersistentRDDs().size() <= baseline
